@@ -13,7 +13,56 @@ from conversadocs_spark.functions.vector import cosine_similarity
 from conversadocs_spark.operators.ivf import ivf_topk
 from conversadocs_spark.operators.knn import knn_per_query, knn_self
 from conversadocs_spark.operators.lsh import ann_topk_lsh
+from conversadocs_spark.operators.serve import (
+    BAND,
+    BINARY,
+    INT8,
+    matryoshka,
+    maxsim,
+    serve,
+    with_provenance,
+)
 from conversadocs_spark.plans.registry import register
+
+
+def _query_batch(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The fixture query batch: vec_id < 5 as (query_id, query_vec),
+    the rest of ``emb`` as the corpus."""
+    queries = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    return queries, emb.where(F.col("vec_id") >= 5)
+
+
+def _allowed_en(docs: DataFrame) -> DataFrame:
+    """The fixture tenant filter: ids of lang='en' AND source<>'src0'
+    documents."""
+    return docs.where(
+        (F.col("lang") == "en") & (F.col("source") != "src0")
+    ).select(F.col("doc_id").alias("vec_id"))
+
+
+def _provenance(docs: DataFrame) -> DataFrame:
+    return docs.select(F.col("doc_id").alias("vec_id"), "lang", "source")
+
+
+def _token_bags(
+    spark: SparkSession, sf_dir: str, n: int
+) -> tuple[DataFrame, DataFrame]:
+    """Fixture multi-vector layout: doc = vec_id DIV 10 (10 token
+    vectors per pseudo-doc). Returns the corpus tokens (doc_id >= n)
+    and the first n doc bags as query tokens (query_id, q_tok,
+    query_vec)."""
+    tokens = io.table(spark, sf_dir, "embeddings").withColumn(
+        "doc_id", F.expr("CAST(vec_id DIV 10 AS BIGINT)")
+    )
+    bags = tokens.where(F.col("doc_id") < n).select(
+        F.col("doc_id").alias("query_id"),
+        F.col("vec_id").alias("q_tok"),
+        F.col("embedding").alias("query_vec"),
+    )
+    return tokens.where(F.col("doc_id") >= n), bags
 
 # Shared DuckDB fragment: exact cosine between two unnested embedding
 # rowsets joined on ordinality (FIXTURES.md: explicit unnest + SUM).
@@ -354,11 +403,7 @@ def ann_topk(spark, sf_dir):
     rows-only count also observes retrieval-quality drift."""
     emb = io.table(spark, sf_dir, "embeddings")
     dim = 64  # fixture dim (FIXTURES.md); operators stay dim-agnostic
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    queries, corpus = _query_batch(emb)
     ann = ann_topk_lsh(corpus, queries, dim=dim, k=3)
     exact = knn_per_query(corpus, queries, k=3)
     return _with_recall_audit(ann, exact, k=3, floor=0.8)
@@ -386,11 +431,7 @@ def ann_ivf(spark, sf_dir):
     (floor 0.8, empty output on drift) so the driver's rows-only count
     observes quality, not just execution."""
     emb = io.table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    queries, corpus = _query_batch(emb)
     ann = ivf_topk(
         corpus, queries, k=3, n_lists=16, nprobe=8, refine_iters=2
     )
@@ -845,11 +886,7 @@ def knn_auto_query(spark, sf_dir):
     from conversadocs_spark.operators.planner import knn_auto
 
     emb = io.table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    queries, corpus = _query_batch(emb)
     result, _strategy = knn_auto(corpus, queries, k=3)
     return result
 
@@ -999,11 +1036,7 @@ def knn_auto_indexed_query(spark, sf_dir):
     from conversadocs_spark.operators.planner import knn_auto_indexed
 
     emb = io.table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    queries, corpus = _query_batch(emb)
     path = _staged_ivf_index(sf_dir, corpus, "ivf")
     result, _strategy = knn_auto_indexed(spark, path, queries, k=3)
     return result
@@ -1062,8 +1095,8 @@ def knn_auto_filtered_batch_query(spark, sf_dir):
     the exact scan, so the output hash-matches the filtered
     per-query-top-3 oracle — the planner preserves the logical
     contract through the persisted-index lifecycle AND the filter
-    composition. The k-row result (never the unbounded documents
-    side) broadcasts into the provenance annotation join.
+    composition. Provenance is the shared serving stage
+    (operators/serve.py with_provenance).
 
     Above the crossover the same call dispatches the prebuilt IVF
     probe (filter composes with the partition-pruned list_id
@@ -1093,24 +1126,13 @@ def knn_auto_filtered_batch_query(spark, sf_dir):
 
     emb = io.table(spark, sf_dir, "embeddings")
     docs = io.table(spark, sf_dir, "documents")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
-    allowed = docs.where(
-        (F.col("lang") == "en") & (F.col("source") != "src0")
-    ).select(F.col("doc_id").alias("vec_id"))
+    queries, corpus = _query_batch(emb)
     path = _staged_ivf_index(sf_dir, corpus, "ivf")
     result, _strategy = knn_auto_filtered_batch(
-        spark, path, queries, allowed, k=3, brute_threshold=250_000
+        spark, path, queries, _allowed_en(docs), k=3,
+        brute_threshold=250_000,
     )
-    prov = docs.select(
-        F.col("doc_id").alias("vec_id"), "lang", "source"
-    )
-    return F.broadcast(result).join(prov, "vec_id").select(
-        "query_id", "vec_id", "sim", "rank", "lang", "source"
-    )
+    return with_provenance(result, _provenance(docs))
 
 
 # --------------------------------------------------------------------------
@@ -1234,11 +1256,7 @@ def ann_pq(spark, sf_dir):
     from conversadocs_spark.operators.pq import pq_topk
 
     emb = io.table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    queries, corpus = _query_batch(emb)
     ann = pq_topk(
         corpus, queries, k=3, m=8, ksub=16, pool=96, refine_iters=2, dim=64
     )
@@ -1680,11 +1698,7 @@ def ann_ivfpq(spark, sf_dir):
     from conversadocs_spark.operators.pq import ivfpq_topk
 
     emb = io.table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    queries, corpus = _query_batch(emb)
     ann = ivfpq_topk(
         corpus, queries, k=3, n_lists=16, nprobe=8, m=8, ksub=16,
         pool=96, refine_iters=2, dim=64,
@@ -1733,37 +1747,19 @@ def knn_filtered_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     language-scoped variant of the reference's retriever (bones.py:74
     retrieves unfiltered; any scoped deployment needs this).
 
-    PRE-filter strategy (operators/knn.py:knn_filtered): the predicate
-    runs on the documents scan (PushedFilters on lang/source), the
-    surviving doc-id set semi-joins into the embeddings scan as a
-    LEFT SEMI join — unhinted, so Catalyst broadcasts it from size
-    statistics when small (the plan test pins BroadcastHashJoin here)
-    and degrades to a shuffled semi-join when the tenant set is
-    itself huge (its own test pins that fallback). Then the same
-    scan -> codegen cosine -> TakeOrderedAndProject(5) pipeline as
-    knn_topk runs over the filtered corpus. Exact over the filter at
-    any selectivity — a post-filtered ANN would under-fill k whenever
-    the predicate is selective. The corpus never shuffles; the k-row
-    result (not the unbounded documents side) is the broadcast side
-    of the provenance annotation join.
+    PRE-filter strategy (operators/serve.py, stage 2): the predicate
+    runs on the documents scan (PushedFilters on lang/source) and the
+    surviving doc-id set semi-joins into the embeddings scan as an
+    unhinted LEFT SEMI join (the plan test pins its auto-broadcast
+    here; its own test pins the shuffled fallback). Then the knn_topk
+    scan -> cosine -> TakeOrderedAndProject(5) runs over the filtered
+    corpus, exact at any selectivity, and the k-row result is
+    annotated with provenance.
     """
-    from conversadocs_spark.operators.knn import knn_filtered
-
     emb = io.table(spark, sf_dir, "embeddings")
     docs = io.table(spark, sf_dir, "documents")
-    allowed = docs.where(
-        (F.col("lang") == "en") & (F.col("source") != "src0")
-    ).select(F.col("doc_id").alias("vec_id"))
-    top = knn_filtered(emb, allowed, query_id=0, k=5)
-    prov = docs.select(
-        F.col("doc_id").alias("vec_id"), "lang", "source"
-    )
-    # provenance annotation: the k-row result is the broadcast side
-    # (documents is the unbounded one at scale). Inner join is exact
-    # here — every surviving id came from the documents scan itself,
-    # so the lookup can never drop a row.
-    return F.broadcast(top).join(prov, "vec_id").select(
-        "vec_id", "sim", "lang", "source"
+    return serve(
+        emb, 0, 5, allowed=_allowed_en(docs), provenance=_provenance(docs)
     )
 
 
@@ -1787,11 +1783,7 @@ def mmr_rerank_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from conversadocs_spark.operators.mmr import mmr_rerank
 
     emb = io.table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    queries, corpus = _query_batch(emb)
     wide = knn_per_query(corpus, queries, k=12).drop("rank")
     # broadcast the Q x 12 candidate list into the embeddings scan
     # (the provenance-join idiom — see mmr_rerank_exact's note)
@@ -1941,11 +1933,7 @@ def mmr_rerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from conversadocs_spark.operators.mmr import mmr_rerank_fixedpoint
 
     emb = io.table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    corpus = emb.where(F.col("vec_id") >= 5)
+    queries, corpus = _query_batch(emb)
     wide = knn_per_query(corpus, queries, k=12).drop("rank")
     # fetch the candidates' vectors by broadcasting the Q x 12 result
     # into the embeddings scan — the provenance-join idiom: unhinted,
@@ -2010,36 +1998,11 @@ def knn_int8_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike the trained ANN families (rows-only by design), SQ8 is a
     pure row-local affine expression — floor-based, engine-portable —
     so this query is fully ORACLE-BACKED: DuckDB replicates
-    quantize -> dequantize -> cosine bit-for-bit.
-
-    Plan shape: one scan computing codes inside codegen (no shuffle,
-    no Python), broadcast 1-row dequantized query,
-    TakeOrderedAndProject(5) — identical scaling to knn_topk with a
-    quarter of the bytes read in a real quantized-storage deployment.
+    quantize -> dequantize -> cosine bit-for-bit. The codes are
+    computed inside the scan projection; the plan is knn_topk's.
     """
-    from conversadocs_spark.operators.quant import (
-        dequantized,
-        quantize_int8,
-    )
-
     emb = io.table(spark, sf_dir, "embeddings")
-    quant = quantize_int8(emb).select(
-        "vec_id", "qmin", "qscale", "q"
-    )
-    deq = quant.select(
-        "vec_id", dequantized().alias("xh")
-    )
-    qv = deq.where(F.col("vec_id") == 0).select(
-        F.col("xh").alias("_qvec")
-    )
-    sim = cosine_similarity(F.col("xh"), F.col("_qvec"))
-    return (
-        deq.crossJoin(F.broadcast(qv))
-        .where(F.col("vec_id") != 0)
-        .select("vec_id", F.round(sim, 6).alias("sim_q"))
-        .orderBy(F.desc("sim_q"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return serve(emb, 0, 5, encoding=INT8)
 
 
 # --------------------------------------------------------------------------
@@ -2107,48 +2070,12 @@ def knn_binary_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole query is ORACLE-BACKED (the trained families are rows-only
     with recall audits by design).
 
-    Scale: the Hamming pass scans ONLY the packed-code column — at
-    384-dim float32 that is 48 bytes/vector instead of 1536, and the
-    scan is XOR+POPCNT with no float math; shortlist is
-    TakeOrderedAndProject(50) (integer key, vec_id tie-break — no
-    rounding ambiguity); the float rescore touches 50 rows. In a real
-    deployment the rescore is an id-join back into the float table;
-    the fixture carries both columns through one scan. The corpus
-    never shuffles.
+    The shortlist is TakeOrderedAndProject(50) on the integer key
+    (vec_id tie-break — no rounding ambiguity); the float rescore is
+    the shared broadcast refine over those 50 rows.
     """
-    from conversadocs_spark.operators.quant import (
-        binarize_sign,
-        hamming_matches,
-    )
-
     emb = io.table(spark, sf_dir, "embeddings")
-    packed = binarize_sign(emb).select("vec_id", "embedding", "bwords")
-    qrow = packed.where(F.col("vec_id") == 0).select(
-        F.col("bwords").alias("_qw"), F.col("embedding").alias("_qv")
-    )
-    cand = (
-        packed.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qrow))
-        .select(
-            "vec_id",
-            "embedding",
-            "_qv",
-            hamming_matches(
-                F.col("bwords"), F.col("_qw"), F.size("embedding")
-            ).alias("matches"),
-        )
-    )
-    shortlist = cand.orderBy(
-        F.desc("matches"), F.asc("vec_id")
-    ).limit(50)
-    rescored = shortlist.select(
-        "vec_id",
-        "matches",
-        F.round(
-            cosine_similarity(F.col("embedding"), F.col("_qv")), 6
-        ).alias("sim"),
-    )
-    return rescored.orderBy(F.desc("sim"), F.asc("vec_id")).limit(5)
+    return serve(emb, 0, 5, encoding=BINARY, shortlist=50)
 
 
 _KNN_BINARY_BATCH_ORACLE = """
@@ -2219,85 +2146,16 @@ def knn_binary_batch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     query batch, the rest as the corpus; per query: Hamming top-50
     shortlist on the packed sign bits, exact float rescore, top-3.
 
-    Scale shape, in order:
-    1. ONE corpus scan computes the packed codes and XOR+POPCNT
-       Hamming matches against all Q broadcast query codes (corpus ×
-       Q candidate rows, but only the 3-integer projection
-       (query_id, vec_id, matches) leaves the scan stage);
-    2. the per-query top-50 window shuffles ONLY that integer
-       projection — ~20 bytes × N × Q, never the packed or float
-       columns (the "window top-k on the integer key" the batch form
-       needs; the single-query form's TakeOrdered has no multi-query
-       analog);
-    3. the Q×50-row shortlist is BROADCAST back onto the embeddings
-       table for the exact rescore — the corpus-side relation never
-       hash-shuffles (plan-pinned in tests/test_vector.py), exactly
-       like knn_matryoshka's refine stage;
-    4. the final per-query top-3 window runs over ≤ Q×50 rows.
-
     Q bound: the Hamming pass is O(N×Q) integer ops with Q codes in
     executor memory (48 bytes/query at 384 dims) — fine into the
     thousands of queries per pass; a larger serving batch splits into
     Q-sized chunks over the SAME corpus scan cadence rather than
     growing the broadcast.
     """
-    from pyspark.sql import Window
-
-    from conversadocs_spark.operators.quant import (
-        binarize_sign,
-        hamming_matches,
-    )
-
-    emb = io.table(spark, sf_dir, "embeddings")
-    packed = binarize_sign(emb).select("vec_id", "embedding", "bwords")
-    queries = packed.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("bwords").alias("_qw"),
-    )
-    cand = (
-        packed.where(F.col("vec_id") >= 5)
-        .crossJoin(F.broadcast(queries))
-        .select(
-            "query_id",
-            "vec_id",
-            hamming_matches(
-                F.col("bwords"), F.col("_qw"), F.size("embedding")
-            ).alias("matches"),
-        )
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc("matches"), F.asc("vec_id")
-    )
-    shortlist = (
-        cand.withColumn("rn", F.row_number().over(w_short))
-        .where(F.col("rn") <= 50)
-        .select("query_id", "vec_id", "matches")
-    )
-    qv = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("_qv"),
-    )
-    rescored = (
-        F.broadcast(shortlist)
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "matches",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("_qv")), 6
-            ).alias("sim"),
-        )
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(w_final))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "vec_id", "matches", "sim")
-    )
+    queries, corpus = _query_batch(io.table(spark, sf_dir, "embeddings"))
+    return serve(
+        corpus, queries, 3, encoding=BINARY, shortlist=50
+    ).drop("rank")
 
 
 # --------------------------------------------------------------------------
@@ -2362,47 +2220,10 @@ def knn_matryoshka_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the coarse pass reads a quarter of the vector bytes — in a
     real deployment the prefix lives in its own (sub)column so the
     scan is dim-proportional, the same lever as knn_binary's packed
-    column; the refine is a 50-row broadcast id-join back into the
-    full-width table (broadcast side = the k-row shortlist, never the
-    corpus). The corpus never shuffles; both stages end in
-    TakeOrderedAndProject.
+    column.
     """
     emb = io.table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == 0).select(
-        F.slice("embedding", 1, _MRL_DIMS).alias("_qc"),
-        F.col("embedding").alias("_qv"),
-    )
-    coarse = (
-        emb.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                cosine_similarity(
-                    F.slice("embedding", 1, _MRL_DIMS), F.col("_qc")
-                ),
-                6,
-            ).alias("sim_coarse"),
-            "_qv",
-        )
-    )
-    shortlist = coarse.orderBy(
-        F.desc("sim_coarse"), F.asc("vec_id")
-    ).limit(50)
-    refined = F.broadcast(shortlist).join(
-        emb.select("vec_id", "embedding"), "vec_id"
-    )
-    return (
-        refined.select(
-            "vec_id",
-            "sim_coarse",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("_qv")), 6
-            ).alias("sim"),
-        )
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return serve(emb, 0, 5, encoding=matryoshka(_MRL_DIMS), shortlist=50)
 
 
 # --------------------------------------------------------------------------
@@ -2443,58 +2264,15 @@ def multivec_maxsim_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     document is a BAG of token vectors; score(Q, D) = sum over query
     vectors of the max cosine against any of D's vectors. Fixture
     multi-vector layout: doc = vec_id DIV 10 (10 token vectors per
-    pseudo-doc); the query is doc 0's bag. Top-5 docs by MaxSim.
+    pseudo-doc); the query is doc 0's bag. Top-5 docs by MaxSim
+    (operators/serve.py maxsim; candidate generation via the ann_*
+    families composes in front at 100 TB).
 
     Fully oracle-backed: per-token cosines are rounded to 6 before the
     MAX (so both engines pick the same argmax regardless of float
     summation order) and the 10-term sum is rounded again.
-
-    Scale: the query bag (tens of vectors) broadcasts; one pass over
-    the corpus token vectors computes |Q| cosines per token inside
-    codegen; then two MAP-SIDE-COMBINABLE aggregations — max per
-    (doc, query-token), sum per doc — shuffle only doc-count-sized
-    relations on the doc key. The token table never shuffles; this is
-    the standard late-interaction serving shape (candidate generation
-    via ann_* families composes in front at 100 TB).
     """
-    from conversadocs_spark.functions.vector import dot_product, l2_norm
-
-    emb = io.table(spark, sf_dir, "embeddings").withColumn(
-        "doc_id", F.expr("CAST(vec_id DIV 10 AS BIGINT)")
-    )
-    qv = emb.where(F.col("doc_id") == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("_qv"),
-        l2_norm(F.col("embedding")).alias("_qn"),
-    )
-    # hoist the corpus token's norm ABOVE the |Q|-way fan-out: inlined
-    # cosine would recompute sqrt(sum(x^2)) once per (token, q_id)
-    # pair — |Q| identical 64-element aggregates per token (Catalyst
-    # has no CSE across projected expressions). dot/( _n * _qn ) is
-    # the same expression tree cosine_similarity builds, evaluated on
-    # the identical doubles, so oracle hashes are unchanged.
-    pairs = (
-        emb.where(F.col("doc_id") != 0)
-        .withColumn("_n", l2_norm(F.col("embedding")))
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "doc_id",
-            "vec_id",
-            "q_id",
-            F.round(
-                dot_product(F.col("embedding"), F.col("_qv"))
-                / (F.col("_n") * F.col("_qn")),
-                6,
-            ).alias("s"),
-        )
-    )
-    per_q = pairs.groupBy("doc_id", "q_id").agg(F.max("s").alias("m"))
-    return (
-        per_q.groupBy("doc_id")
-        .agg(F.round(F.sum("m"), 6).alias("maxsim"))
-        .orderBy(F.desc("maxsim"), F.asc("doc_id"))
-        .limit(5)
-    )
+    return maxsim(*_token_bags(spark, sf_dir, 1), 5)
 
 
 _KNN_INT8_BATCH_ORACLE = """
@@ -2548,49 +2326,11 @@ def knn_int8_batch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; per query, top-5 by cosine over the int8-dequantized
     representation. No rescore stage: SQ8 IS the scoring tier (its
     error is the quantization's, not a shortlist's), which keeps the
-    batch form to exactly two stages.
-
-    Scale shape: one corpus scan computes the dequantized codes in
-    codegen and scores all Q broadcast queries; only the 3-column
-    integer/double projection (query_id, vec_id, sim_q) reaches the
-    per-query top-5 window — the corpus floats never shuffle, same
-    contract as knn_binary_batch's stage 2 (plan-pinned). Q bound:
-    Q x dim dequantized doubles in the broadcast — thousands of
-    queries per pass at 384 dims; bigger batches chunk over the same
-    scan cadence."""
-    from pyspark.sql import Window
-
-    from conversadocs_spark.operators.quant import (
-        dequantized,
-        quantize_int8,
-    )
-
-    emb = io.table(spark, sf_dir, "embeddings")
-    deq = quantize_int8(emb).select(
-        "vec_id", dequantized().alias("xh")
-    )
-    queries = deq.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("xh").alias("_qh")
-    )
-    sims = (
-        deq.where(F.col("vec_id") >= 5)
-        .crossJoin(F.broadcast(queries))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                cosine_similarity(F.col("xh"), F.col("_qh")), 6
-            ).alias("sim_q"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_q"), F.asc("vec_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "vec_id", "sim_q", "rank")
-    )
+    batch form to exactly two stages. Q bound: Q x dim dequantized
+    doubles in the broadcast — thousands of queries per pass at 384
+    dims; bigger batches chunk over the same scan cadence."""
+    queries, corpus = _query_batch(io.table(spark, sf_dir, "embeddings"))
+    return serve(corpus, queries, 5, encoding=INT8)
 
 
 _KNN_FILTERED_INT8_BATCH_ORACLE = """
@@ -2681,140 +2421,37 @@ def knn_filtered_int8_batch_query(
     scoring (the reference's retriever, bones.py:74, is the
     unfiltered single-query corner of this matrix). Vectors vec_id<5
     are the query batch; the corpus is restricted to documents with
-    lang='en' AND source<>'src0'; per query, a TIE-AWARE
-    SQ8-dequantized shortlist (dense_rank() <= 20: the top-20
-    DISTINCT quantized sims, each plateau kept whole; row_number()
-    <= 4096 worst-case bound), then an EXACT fp32 re-rank of that
-    query-bounded candidate set emits the top-5, annotated with
-    provenance.
+    lang='en' AND source<>'src0' BEFORE any dequantize/score work;
+    per query, a TIE-AWARE SQ8-dequantized shortlist (operators/
+    serve.py BAND: dense_rank() <= 20, the top-20 DISTINCT quantized
+    sims, each plateau kept whole; row_number() <= 4096 worst-case
+    bound), then an EXACT fp32 re-rank of that query-bounded
+    candidate set emits the top-5, annotated with provenance.
 
     The re-rank stage is the r15 recall-margin fix (VERDICT r14 #1):
     at 5M near-dup-heavy vectors the filtered corpus halves the pool
     and promotes float near-ties inside one 8-bit quantization step
     into the top-5 cut — measured recall sat EXACTLY at the 0.80
-    gate floor, and the sf100 diagnosis showed WHY a plain top-(k*C)
-    superset can never fix it: the true winners sit at dense_rank 2
-    BEHIND a ~1000-deep plateau of int8 rounding noise, so every
-    row-count-based cut (row_number OR rank(), which counts rows
-    above) puts them at 1001+ (see the shortlist comment below).
-    The value-band shortlist + fp32 rescore (the matryoshka
-    coarse->refine cadence applied to the SQ8 tier) recovers every
-    true top-5 member whose band reaches the top-20 distinct values;
-    sf100 gate floor raised 0.75 -> 0.95.
-
-    Order of operations is the scale contract: the documents
-    predicate is pushed to the documents scan (PushedFilters), the
-    surviving id set semi-joins into the embeddings scan as an
-    UNhinted LEFT SEMI (Catalyst broadcasts it from size stats, and
-    it degrades to a shuffled semi-join only when the tenant set is
-    itself huge) — so out-of-filter vectors are dropped BEFORE any
-    dequantize/score work, and exactness over the filter holds at any
-    selectivity (a post-filtered ANN under-fills k under selective
-    predicates). Then the knn_int8_batch cadence: one scan of the
-    filtered corpus scores all Q broadcast dequantized queries, only
-    the skinny (query_id, vec_id, sim_q) projection reaches the
-    per-query shortlist windows — the corpus floats never shuffle
-    (plan-pinned: semi-join below the windows, every hash exchange
-    keyed on query_id). The refine stage broadcasts the
-    Q x (<=4096) shortlist into a SECOND embeddings scan (a
-    broadcast hash join prunes the scan to the candidate rows — no
-    corpus exchange) and the Q-row fp32 query batch into that, so
-    exact cosine runs over the query-bounded candidate rows only.
-    The Q x 5 result — never the unbounded documents side — is the
-    broadcast side of the provenance join."""
-    from pyspark.sql import Window
-
-    from conversadocs_spark.operators.quant import (
-        dequantized,
-        quantize_int8,
-    )
-
+    gate floor. Per-vector SQ8 resolves ~1e-3 of cosine, and the
+    sf100 diagnosis put the true fp32 top-5 at dense_rank 2 BEHIND a
+    ~1000-deep plateau of int8 rounding noise, so every row-count cut
+    (row_number OR rank(), which counts rows above) puts them at
+    1001+. The value-band shortlist + fp32 rescore recovers every
+    true top-5 member whose band reaches the top-20 distinct values
+    (recall within bands cut by the 4096 bound is best-effort by
+    lowest vec_id — the honest limit of an 8-bit first stage); sf100
+    gate floor raised 0.75 -> 0.95."""
     emb = io.table(spark, sf_dir, "embeddings")
     docs = io.table(spark, sf_dir, "documents")
-    allowed = docs.where(
-        (F.col("lang") == "en") & (F.col("source") != "src0")
-    ).select(F.col("doc_id").alias("vec_id"))
-    queries = (
-        quantize_int8(emb.where(F.col("vec_id") < 5))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            dequantized().alias("_qh"),
-        )
-    )
-    # Filter FIRST (unhinted semi-join on the raw scan), quantize the
-    # survivors only — the filter reaches the corpus before the
-    # dequantize/score pass.
-    corpus = quantize_int8(
-        emb.where(F.col("vec_id") >= 5).join(
-            allowed, "vec_id", "left_semi"
-        )
-    ).select("vec_id", dequantized().alias("xh"))
-    sims = corpus.crossJoin(F.broadcast(queries)).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            cosine_similarity(F.col("xh"), F.col("_qh")), 6
-        ).alias("sim_q"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_q"), F.asc("vec_id")
-    )
-    w_tie = Window.partitionBy("query_id").orderBy(F.desc("sim_q"))
-    # TIE-AWARE shortlist: dense_rank() (not row_number, not rank) so
-    # the shortlist is "the top-20 DISTINCT sim_q values, each
-    # plateau kept WHOLE". Per-vector SQ8 resolves ~1e-3 of cosine,
-    # so at 5M near-dup-heavy vectors >=1000 corpus rows can share
-    # one rounded sim_q — sf100 measured the true fp32 top-5 at
-    # dense_rank 2 BEHIND a 1000-deep higher plateau of quantization
-    # noise (int8 rounds junk UP past the winners), i.e. row_number
-    # and rank() both put them at 1001+: no fixed row_number cut-off
-    # survives, and rank()<=20 fails too (rank counts ROWS above, so
-    # one deep plateau pushes everything below it past any row-count
-    # threshold). dense_rank()<=20 admits every member of the top-20
-    # value bands; the row_number()<=4096 companion is the documented
-    # worst-case bound that keeps the candidate set query-bounded
-    # (recall within bands cut by it is then best-effort by lowest
-    # vec_id — the honest limit of an 8-bit first stage).
-    shortlist = (
-        sims.withColumn("rn", F.row_number().over(w))
-        .withColumn("rk_band", F.dense_rank().over(w_tie))
-        .where((F.col("rk_band") <= 20) & (F.col("rn") <= 4096))
-        .select("query_id", "vec_id", "sim_q")
-    )
-    # fp32 refine over the query-bounded Q x 20 shortlist: broadcast
-    # it into a second embeddings scan (BHJ prunes the scan — the
-    # corpus never exchanges) and score exactly against the Q-row
-    # raw query batch.
-    qraw = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("_q"),
-    )
-    refined = (
-        F.broadcast(shortlist)
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qraw), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "sim_q",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("_q")), 6
-            ).alias("sim"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    top = (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "vec_id", "sim_q", "sim", "rank")
-    )
-    prov = docs.select(
-        F.col("doc_id").alias("vec_id"), "lang", "source"
-    )
-    return F.broadcast(top).join(prov, "vec_id").select(
-        "query_id", "vec_id", "sim_q", "sim", "rank", "lang", "source"
+    queries, corpus = _query_batch(emb)
+    return serve(
+        corpus,
+        queries,
+        5,
+        encoding=INT8,
+        allowed=_allowed_en(docs),
+        shortlist=BAND,
+        provenance=_provenance(docs),
     )
 
 
@@ -2877,72 +2514,14 @@ def knn_matryoshka_batch_query(
     """Batch-of-queries Matryoshka retrieval — third cell of the
     quantized/reduced serving matrix (binary and SQ8 batch forms
     above): per query, coarse top-50 on the 16-dim prefix, exact
-    full-dimension rescore, top-3 with both scores.
-
-    Scale shape mirrors knn_binary_batch stage for stage: one corpus
-    scan computes the prefix cosine against all Q broadcast prefix
-    queries and emits only the skinny (query_id, vec_id, sim_coarse)
-    projection; the per-query top-50 window is map-side pruned; the
-    Q x 50 shortlist is broadcast back into the full-width table for
-    the rescore (the corpus never shuffles — plan-pinned); the final
-    top-3 window runs over <= Q x 50 rows. The coarse pass reads a
-    quarter of the vector bytes, and in a real deployment the prefix
-    lives in its own subcolumn so the batch scan cost is
+    full-dimension rescore, top-3 with both scores. The coarse pass
+    reads a quarter of the vector bytes, and in a real deployment the
+    prefix lives in its own subcolumn so the batch scan cost is
     dim-proportional."""
-    from pyspark.sql import Window
-
-    emb = io.table(spark, sf_dir, "embeddings")
-    qc = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.slice("embedding", 1, _MRL_DIMS).alias("_qc"),
-    )
-    coarse = (
-        emb.where(F.col("vec_id") >= 5)
-        .crossJoin(F.broadcast(qc))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                cosine_similarity(
-                    F.slice("embedding", 1, _MRL_DIMS), F.col("_qc")
-                ),
-                6,
-            ).alias("sim_coarse"),
-        )
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_coarse"), F.asc("vec_id")
-    )
-    shortlist = (
-        coarse.withColumn("rn", F.row_number().over(w_short))
-        .where(F.col("rn") <= 50)
-        .select("query_id", "vec_id", "sim_coarse")
-    )
-    qv = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("_qv"),
-    )
-    rescored = (
-        F.broadcast(shortlist)
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "sim_coarse",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("_qv")), 6
-            ).alias("sim"),
-        )
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(w_final))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "vec_id", "sim_coarse", "sim")
-    )
+    queries, corpus = _query_batch(io.table(spark, sf_dir, "embeddings"))
+    return serve(
+        corpus, queries, 3, encoding=matryoshka(_MRL_DIMS), shortlist=50
+    ).drop("rank")
 
 
 _MULTIVEC_BATCH_ORACLE = """
@@ -2991,63 +2570,13 @@ def multivec_maxsim_batch_query(
     the serving matrix (binary, SQ8, Matryoshka batch forms above):
     THREE multi-vector queries (doc bags 0-2, 10 token vectors each)
     scored against the rest of the corpus bags, top-3 docs per query.
+    All Q query bags broadcast together (Q x 10 x dim doubles) into
+    ONE pass over the corpus token table; the aggregations are
+    per (query, doc, query-token) and per (query, doc).
 
-    Scale shape: all Q query bags broadcast together (Q x 10 x dim
-    doubles); ONE pass over the corpus token table computes every
-    (corpus token x query token) cosine inside codegen; then the same
-    two MAP-SIDE-COMBINABLE aggregations as the single-query form —
-    max per (query, doc, query-token), sum per (query, doc) — so the
-    only shuffled relations are doc-count-sized per query, never the
-    token table. Per-token cosines round to 6 BEFORE the max (both
-    engines pick the same argmax) and the sum rounds again before
-    the per-query rank."""
-    from pyspark.sql import Window
-
-    from conversadocs_spark.functions.vector import dot_product, l2_norm
-
-    emb = io.table(spark, sf_dir, "embeddings").withColumn(
-        "doc_id", F.expr("CAST(vec_id DIV 10 AS BIGINT)")
-    )
-    qv = emb.where(F.col("doc_id") < 3).select(
-        F.col("doc_id").alias("query_id"),
-        F.col("vec_id").alias("q_tok"),
-        F.col("embedding").alias("_qv"),
-        l2_norm(F.col("embedding")).alias("_qn"),
-    )
-    # corpus-token norm hoisted above the Q*10-way fan-out (see
-    # multivec_maxsim): inlined cosine recomputes the token's norm
-    # once per broadcast query token — 30 identical 64-element
-    # aggregates per corpus row at the fixture batch. Values are
-    # bit-identical (same expression tree, hoisted), oracle unchanged;
-    # measured at the sf100 spot-gate scale (2M corpus tokens x 30
-    # query tokens): 47.0 s before, 19.9 s after — the heaviest
-    # serving query cut 2.4x.
-    pairs = (
-        emb.where(F.col("doc_id") >= 3)
-        .withColumn("_n", l2_norm(F.col("embedding")))
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "query_id",
-            "doc_id",
-            "q_tok",
-            F.round(
-                dot_product(F.col("embedding"), F.col("_qv"))
-                / (F.col("_n") * F.col("_qn")),
-                6,
-            ).alias("s"),
-        )
-    )
-    per_q = pairs.groupBy("query_id", "doc_id", "q_tok").agg(
-        F.max("s").alias("m")
-    )
-    scores = per_q.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum("m"), 6).alias("maxsim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("maxsim"), F.asc("doc_id")
-    )
-    return (
-        scores.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "doc_id", "maxsim")
-    )
+    The corpus-token norm is hoisted above the Q*10-way fan-out,
+    measured at the sf100 spot-gate scale (2M corpus tokens x 30
+    query tokens): 47.0 s inlined, 19.9 s hoisted."""
+    return maxsim(
+        *_token_bags(spark, sf_dir, 3), 3, keys=["query_id"]
+    ).drop("rank")

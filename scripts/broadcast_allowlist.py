@@ -45,35 +45,20 @@ Bounds, per file (reviewed r9):
 - plans/streamqueries.py 2: event_type dim; r10
   streaming_decay_replay adds the 1-row global-anchor aggregate.
 - plans/text.py 2: vocab df table (bounded by vocab), 1-row N.
-- plans/vector.py 13: 1-row query vectors, 50-row shortlists,
-  provenance top-k (flipped small side per ADVICE r8); r9 batch
-  retrieval adds a Q-row packed-query batch, a Q×50 shortlist, and a
-  Q-row float query table (all bounded by the query batch); r9
-  semdedup_prune adds the 1-row packed seed-centroid side (K x dim
-  doubles folded into one row, the operators/ivf.py assignment
-  idiom); r9 knn_int8_batch adds the Q-row dequantized query batch;
-  r9 knn_matryoshka_batch adds the Q-row prefix batch, the Q x 50
-  shortlist, and the Q-row full-width query table; r9
-  multivec_maxsim_batch adds the Q x 10-row query token-bag
-  broadcast; r10 knn_filtered_int8_batch adds the Q-row dequantized
-  query batch and the Q x 5 provenance shortlist (the allowed-id
-  semi-join side stays deliberately UNhinted, as in knn_filtered);
-  r11 knn_auto_filtered_batch adds its Q x 3 provenance shortlist
-  (allowed-id semi-join likewise UNhinted, inside the planner); r11
-  MMR pair adds the Q x 12 candidate-vector fetch broadcasts (the
-  plan audit caught Catalyst building on the corpus side at fixture
-  scale — SMJ-shuffling the corpus at 100 TB); r15
-  knn_filtered_int8_batch's fp32 refine stage adds the
-  Q x (<=4096) tie-aware shortlist (row_number()<=4096 bounds it by
-  construction) and the Q-row raw fp32 query batch — both
-  query-bounded, and hinting them is what keeps the second
-  embeddings scan a BHJ prune instead of a corpus exchange.
+- plans/vector.py 6: the knn_topk provenance dim (left join, build
+  side = documents — unchanged since r8); dedup_embedding's two
+  document-lookup broadcasts; r9 semdedup_prune's 1-row packed
+  seed-centroid side (K x dim doubles folded into one row, the
+  operators/ivf.py assignment idiom); r11 MMR pair's Q x 12
+  candidate-vector fetch broadcasts (the plan audit caught Catalyst
+  building on the corpus side at fixture scale — SMJ-shuffling the
+  corpus at 100 TB). Every other serving broadcast (query vectors and
+  batches, shortlists, refine query batches, provenance top-k) moved
+  into operators/serve.py.
 - streaming/cdc.py 1: per-micro-batch CDC delta.
 - functions/zorder.py 1: 1-row min/max bounds aggregate.
 - operators/incremental.py 1: O(batch) new-doc signatures.
 - operators/ivf.py 3: k-row centroid table (k ≪ corpus).
-- operators/knn.py 3: 1-row query vector / k-row probe shortlist
-  (the filtered-kNN semi-join side is deliberately UNhinted).
 - operators/lsh.py 6: hyperplane matrix + 1-row query signature;
   r15 lsh_exact_md5 mirrors the production trio (integer planes
   frame on both bucketing sides + the Q-row bucketed query batch —
@@ -85,16 +70,25 @@ Bounds, per file (reviewed r9):
   query codes; r15 pq_exact_md5 mirrors the production trio (packed
   twin codebook, Q-row ADC table batch, Q-row refine query batch —
   all bounded by m*ksub / the query batch).
+- operators/serve.py 4: the serving builder's four sites, each
+  query-bounded: the query side of every corpus fan-out (a 1-row
+  looked-up query or a Q-row batch, incl. multivector query bags of
+  Q x tokens rows); the per-query shortlist broadcast back onto the
+  corpus for the fp32 refine (row_number() <= N, or the tie-aware
+  band capped by row_number() <= 4096, so <= Q x 4096 rows); the
+  Q-row raw query batch of that refine; the k-row (Q x k) result as
+  the provenance build side. The allowed-id semi-join stays
+  deliberately UNhinted (knn_filtered, ADVICE r7).
 """
 
 BROADCAST_ALLOWED: dict[str, int] = {
     "functions/zorder.py": 1,
     "operators/incremental.py": 1,
     "operators/ivf.py": 3,
-    "operators/knn.py": 3,
     "operators/lsh.py": 6,
     "operators/pagerank.py": 3,
     "operators/pq.py": 11,
+    "operators/serve.py": 4,
     "plans/aggregates.py": 6,
     "plans/analytics.py": 11,
     "plans/eventtime.py": 1,
@@ -106,6 +100,6 @@ BROADCAST_ALLOWED: dict[str, int] = {
     "plans/retrieval.py": 4,
     "plans/streamqueries.py": 2,
     "plans/text.py": 2,
-    "plans/vector.py": 25,
+    "plans/vector.py": 6,
     "streaming/cdc.py": 1,
 }

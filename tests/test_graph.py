@@ -184,6 +184,7 @@ def test_pagerank_bounded_loop_is_exchange_free(spark):
     shuffle width (corpus-scale path unchanged) and leave the session
     conf untouched afterward."""
     from conversadocs_spark.operators import pagerank as pr
+    from conversadocs_spark.plans.graph import BOUNDED_LOOP_CONF
 
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)],
@@ -193,15 +194,8 @@ def test_pagerank_bounded_loop_is_exchange_free(spark):
     pr.pagerank_fixedpoint(
         df, iters=4, tol_fp=10**12, dangling="none",
         checkpoint_every=4,
-        loop_conf={
-            # mirrors graph_pagerank_exact's loop_conf exactly
-            # (including the r16 codegen-off key) so the pin covers
-            # the conf the bench query actually runs under
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": "1",
-            "spark.sql.join.preferSortMergeJoin": "false",
-            "spark.sql.codegen.wholeStage": "false",
-        },
+        # the conf graph_pagerank_exact itself runs under
+        loop_conf=BOUNDED_LOOP_CONF,
         plan_sink=sink,
     ).collect()
     assert sink and sink[0], "round plan not captured via plan_sink"
@@ -214,6 +208,13 @@ def test_pagerank_bounded_loop_is_exchange_free(spark):
     assert not re.search(
         r"Exchange (hash|range|single)partitioning", stripped, re.I
     ), f"bounded loop round re-grew a shuffle:\n{stripped}"
+    # whole-stage codegen is off inside the bounded loop: no
+    # WholeStageCodegen node, which the executed-plan string prints
+    # as a "*(<codegen stage id>)" operator prefix
+    assert "WholeStageCodegen" not in stripped
+    assert not re.search(r"\*\(\d+\) ", stripped), (
+        f"bounded loop round is whole-stage codegen'd:\n{stripped}"
+    )
 
     # corpus-scale path: no loop_conf -> session width inside the
     # round (hash exchanges present), session conf intact after
@@ -229,6 +230,9 @@ def test_pagerank_bounded_loop_is_exchange_free(spark):
         r"Exchange hashpartitioning",
         _strip_cached_lineage(sink2[0]),
     ), "session-width loop lost its per-round aggregate shuffle"
+    # ... and keeps whole-stage codegen (the marker the bounded-loop
+    # check above looks for is real)
+    assert re.search(r"\*\(\d+\) ", _strip_cached_lineage(sink2[0]))
 
 
 def test_graph_pagerank_exact_matches_oracle(spark, sf_oracle_dir):

@@ -19,7 +19,12 @@ from conversadocs_spark.sources.sink import (
     write_index_overwrite,
 )
 
-SCRATCH = "/root/repo/.ingest_stage"
+# next to plans/ingestion.py's own stage (repo root, wherever the
+# checkout lives)
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".ingest_stage",
+)
 
 
 def test_scan_parses_known_drops_unknown(spark, sf_dir):

@@ -21,7 +21,12 @@ from conversadocs_spark.streaming.source import (
 )
 from conversadocs_spark.streaming.state import chat_turn, session_chat
 
-STAGE = "/root/repo/.stream_stage"
+# the repo-root stage plans/streamqueries.py uses (_STAGE_ROOT),
+# wherever the checkout lives
+STAGE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".stream_stage",
+)
 
 
 def _replay(stream_df, mode, name):

@@ -844,27 +844,6 @@ def test_multivec_maxsim_matches_numpy(spark, sf_oracle_dir):
     assert sims == sorted(sims, reverse=True)
 
 
-def test_knn_binary_batch_corpus_never_shuffles(spark, sf_oracle_dir):
-    """Batch-form scale pins: (a) the corpus-sized relation never
-    hash-shuffles — every join touching the embedding column is a
-    broadcast join (no SMJ/shuffled-hash anywhere); (b) the only hash
-    exchanges partition the 3-integer candidate projection by
-    query_id; (c) the per-query top-k is map-side pruned (partial
-    WindowGroupLimit below the exchange), so the shuffle moves at
-    most partitions x Q x 50 skinny rows, not corpus x Q."""
-    from conversadocs_spark.plans import QUERIES
-
-    df = QUERIES["knn_binary_batch"](spark, sf_oracle_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final
-    for line in final.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "hashpartitioning(query_id" in line, line
-    assert "WindowGroupLimit" in final and "Partial" in final
-
-
 def test_knn_binary_batch_recall_floor(spark, sf_oracle_dir):
     """Recall sanity on the fixture: the Hamming-shortlisted top-3
     must recover >= 2/3 of the exact brute-force cosine top-3 for
@@ -942,93 +921,74 @@ def test_semdedup_pair_join_is_equi_keyed(spark, sf_oracle_dir):
     ), plan
 
 
-def test_knn_int8_batch_corpus_never_shuffles(spark, sf_oracle_dir):
-    """SQ8 batch-form scale pins, mirroring knn_binary_batch's: no
-    SMJ/shuffled-hash join anywhere, every hash exchange partitions
-    the skinny (query_id, vec_id, sim_q) projection by query_id, and
-    the per-query top-5 is map-side pruned below the exchange."""
+def test_knn_filtered_int8_batch_filter_before_score(
+    spark, sf_oracle_dir
+):
+    """Composed serving-matrix results: every returned id satisfies
+    the predicate and each query fills k=5. The plan half (the LEFT
+    SEMI filter sits below the scoring window) is
+    test_batch_tier_plan_pins[knn_filtered_int8_batch]."""
     from conversadocs_spark.plans import QUERIES
 
-    df = QUERIES["knn_int8_batch"](spark, sf_oracle_dir)
+    rows = QUERIES["knn_filtered_int8_batch"](spark, sf_oracle_dir).collect()
+    assert len(rows) == 25  # 5 queries x top-5
+    assert all(r.lang == "en" and r.source != "src0" for r in rows)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "knn_binary_batch",
+        "knn_int8_batch",
+        "knn_matryoshka_batch",
+        "knn_filtered_int8_batch",
+        "multivec_maxsim_batch",
+    ],
+)
+def test_batch_tier_plan_pins(spark, sf_oracle_dir, name):
+    """Batch-form scale pins, one contract for every query-batch tier
+    (operators/serve.py): (a) the corpus-sized relation never
+    hash-shuffles — every join touching it is a broadcast join (no
+    SMJ/shuffled-hash anywhere); (b) the only hash exchanges are keyed
+    on query_id, over the skinny per-query projection (or the
+    per-query MaxSim aggregates); (c) the per-query top-k is map-side
+    pruned (Partial WindowGroupLimit below the exchange), so the
+    shuffle moves at most partitions x Q x N rows, not corpus x Q;
+    (d) a metadata filter enters as a LEFT SEMI join BELOW the
+    per-query windows (in the top-down plan string the LeftSemi line
+    sits deeper than the last Window line), i.e. it reaches the corpus
+    scan before any dequantize/score work."""
+    from conversadocs_spark.plans import QUERIES
+
+    df = QUERIES[name](spark, sf_oracle_dir)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final
-    for line in final.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "hashpartitioning(query_id" in line, line
-    assert "WindowGroupLimit" in final and "Partial" in final
-
-
-def test_knn_filtered_int8_batch_filter_before_score(
-    spark, sf_oracle_dir
-):
-    """Composed serving-matrix pins: (a) the metadata filter enters
-    as a broadcast LEFT SEMI join BELOW the per-query window (filter
-    reaches the corpus scan before the dequantize/score pass — in the
-    top-down plan string the LeftSemi line sits deeper than the last
-    Window line); (b) the knn_int8_batch scale contract holds through
-    the composition — no SMJ/shuffled-hash, every hash exchange keyed
-    on query_id over the skinny projection, window map-side pruned;
-    (c) every returned id satisfies the predicate and each query
-    fills k=5."""
-    from conversadocs_spark.plans import QUERIES
-
-    df = QUERIES["knn_filtered_int8_batch"](spark, sf_oracle_dir)
-    rows = df.collect()
-    assert len(rows) == 25  # 5 queries x top-5
-    assert all(r.lang == "en" and r.source != "src0" for r in rows)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "SortMergeJoin" not in final
-    assert "ShuffledHashJoin" not in final
     lines = final.splitlines()
-    semi = [i for i, l in enumerate(lines) if "LeftSemi" in l]
-    wins = [i for i, l in enumerate(lines) if "Window" in l]
-    assert semi and wins and min(semi) > max(wins), (
-        "semi-join filter must sit below the scoring window"
-    )
     for line in lines:
         if "Exchange hashpartitioning" in line:
             assert "hashpartitioning(query_id" in line, line
     assert "WindowGroupLimit" in final and "Partial" in final
-
-
-def test_knn_mrl_batch_corpus_never_shuffles(spark, sf_oracle_dir):
-    """Matryoshka batch-form scale pins (same contract as the binary
-    and SQ8 batch cells): no SMJ/shuffled-hash join, every hash
-    exchange keyed on query_id over the skinny coarse projection, and
-    the per-query windows map-side pruned."""
-    from conversadocs_spark.plans import QUERIES
-
-    df = QUERIES["knn_matryoshka_batch"](spark, sf_oracle_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final
-    for line in final.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "hashpartitioning(query_id" in line, line
-    assert "WindowGroupLimit" in final and "Partial" in final
+    if name == "knn_filtered_int8_batch":
+        semi = [i for i, l in enumerate(lines) if "LeftSemi" in l]
+        wins = [i for i, l in enumerate(lines) if "Window" in l]
+        assert semi and wins and min(semi) > max(wins), (
+            "semi-join filter must sit below the scoring window"
+        )
 
 
 def test_multivec_batch_token_table_never_sort_merges(
     spark, sf_oracle_dir
 ):
-    """MaxSim batch scale pins: the corpus token table reaches the
-    query bags through a broadcast (no SMJ/shuffled-hash), the
-    per-query top-3 is map-side pruned, and every query group gets
-    exactly 3 docs agreeing with the single-query form's semantics
-    (query 0's ranking must equal multivec_maxsim's top-3 restricted
-    to docs >= 3)."""
+    """MaxSim batch results: every query group gets exactly 3 docs
+    agreeing with the single-query form's semantics (query 0's ranking
+    must equal multivec_maxsim's top-3 restricted to docs >= 3). The
+    plan half (no SMJ/shuffled-hash join on the token table, map-side
+    pruned top-3) is test_batch_tier_plan_pins[multivec_maxsim_batch]."""
     from conversadocs_spark.plans import QUERIES
 
-    df = QUERIES["multivec_maxsim_batch"](spark, sf_oracle_dir)
-    rows = df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final
-    assert "WindowGroupLimit" in final and "Partial" in final
+    rows = QUERIES["multivec_maxsim_batch"](spark, sf_oracle_dir).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append((r.doc_id, r.maxsim))
